@@ -313,6 +313,16 @@ def _load_prior_queries(repo_dir: Path) -> tuple[str, dict[str, float], str]:
     return "", {}, ""
 
 
+def _run_cpus() -> int:
+    """Core count of the run: ``$SPARK_GRAFT_CPUS`` when it is an
+    integer, else every core (unset, ``*`` as in ``local[*]``, or
+    malformed). Never raises: it is read after the timing work."""
+    try:
+        return int(os.environ["SPARK_GRAFT_CPUS"])
+    except (KeyError, ValueError):
+        return os.cpu_count() or 0
+
+
 def build_summaries(
     timings: dict[str, float],
     stddevs: dict[str, float],
@@ -351,7 +361,7 @@ def build_summaries(
         # Core count the run was taken at (round 15: the scaling rerun
         # overwrites BENCH_SUMMARY.json, so the record must say which
         # core count produced it or cross-count priors get compared).
-        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 0)),
+        "cpus": _run_cpus(),
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         # Pinned tier only — a frozen 20-name set, so this map cannot
         # grow. Full maps (all tiers, full precision): BENCH_SUMMARY.json.

@@ -5,6 +5,14 @@ Model-for-model rebuild of the reference's dbt project
 intermediate QA -> SCD2 snapshot -> marts (persisted tables) -> audit.
 Per-model reference citations are in each builder's docstring.
 
+Two staging models are tables, not views: of the models a build
+writes, ``stg_order`` is read by four (the SCD, the fact and both
+audits) and ``stg_customer`` by three (the SCD, the customer dim and
+the orphan audit). As lazy views each would be recomputed, shuffles
+and all, inside every consumer's Spark jobs. With a workdir each is
+computed and written once, and its consumers scan the parquet,
+column-pruned. Without a workdir tables stay lazy, like views.
+
 Layout mirrors the lineage in SURVEY.md §0; all transforms are Column
 expressions (no UDFs), dims are broadcast into the fact, and the fact
 write partitions by event date for downstream pruning.
@@ -58,7 +66,7 @@ def build_glamira_pipeline(
             F.col("isp").cast("string").alias("isp"),
         )
 
-    @p.model("stg_order")
+    @p.model("stg_order", materialized="table")
     def stg_order(p: Pipeline) -> DataFrame:
         """ref: models/staging/stg_order.sql — checkout filter, typed
         casts, double LEFT JOIN UNNEST WITH OFFSET (posexplode_outer x2),
@@ -144,27 +152,20 @@ def build_glamira_pipeline(
             ).alias("line_total_amount"),
         )
 
-    @p.model("stg_customer")
+    @p.model("stg_customer", materialized="table")
     def stg_customer(p: Pipeline) -> DataFrame:
         """ref: models/staging/stg_customer.sql — user status classify,
-        join back, email multiplicity flag, distinct pairs."""
+        email multiplicity flag, distinct pairs. The reference's
+        ``user_check`` CTE groups by user and joins back only to attach
+        ``user_id_status(user_id_db)``, a pure function of the key that
+        is never VALID for NULL, so a row-wise filter keeps the same
+        rows without the two shuffles."""
         src = p.source("countly_summary")
-        user_check = (
-            src.groupBy("user_id_db")
-            .agg(F.count("*").alias("_n"))
-            .select(
-                "user_id_db", user_id_status(F.col("user_id_db")).alias("user_status")
-            )
-        )
-        checked = (
-            user_check.join(src, "user_id_db")
-            .filter(
-                F.col("email_address").isNotNull()
-                & (F.trim("email_address") != "")
-                & (F.col("user_status") == "VALID")
-            )
-            .select("email_address", F.col("user_id_db").cast("string").alias("user_db_id"))
-        )
+        checked = src.filter(
+            F.col("email_address").isNotNull()
+            & (F.trim("email_address") != "")
+            & (user_id_status(F.col("user_id_db")) == "VALID")
+        ).select("email_address", F.col("user_id_db").cast("string").alias("user_db_id"))
         email_base = checked.groupBy("email_address").agg(
             F.when(F.countDistinct("user_db_id") == 1, "Unique")
             .when(F.countDistinct("user_db_id") > 1, "Multiple")
@@ -190,15 +191,14 @@ def build_glamira_pipeline(
         j = src.select(F.to_json(F.col("product")).alias("pj")).filter(
             F.col("pj").isNotNull()
         )
-        # ONE json_tuple parse per row (round 15, guide §1.2 per-task
-        # work): the previous 16 get_json_object calls each re-parsed
-        # the same JSON string — 16 full parses per row on this
-        # single-task 20k-row stage (2.2 s of its executor time in the
-        # pipeline_e2e profile). json_tuple extracts all top-level keys
-        # in one parse and is value-identical for every field here
-        # (verified bit-exact against get_json_object on all 20k sf0.1
-        # rows, nested/decimal/missing cases included — and the oracle
-        # re-pins it).
+        # ONE json_tuple parse per row, where 16 get_json_object calls
+        # (the reference's JSON_VALUE) each re-parsed the same string.
+        # The two agree only because ``pj`` is to_json of a typed
+        # struct, whose keys are unique: on a duplicate key json_tuple
+        # keeps the last value and get_json_object the first. Parsing
+        # raw JSON text here instead would need get_json_object back.
+        # Checked bit-exact against get_json_object on 20k sf0.1 rows,
+        # nested/decimal/missing cases included.
         keys = (
             "product_id", "productId", "id", "_id", "gender",
             "category_name", "name", "product_type", "store_code",
@@ -257,7 +257,7 @@ def build_glamira_pipeline(
         o = p.ref("stg_order")
         c = p.ref("stg_customer")
         fact = (
-            o.join(c.select("user_db_id").distinct(), "user_db_id")
+            o.join(c.select("user_db_id"), "user_db_id", "left_semi")
             .filter(
                 F.col("user_db_id").isNotNull()
                 & F.col("email_address").isNotNull()
@@ -281,40 +281,26 @@ def build_glamira_pipeline(
         (email,user) from the SCD history wins over staging email."""
         c = p.ref("stg_customer")
         scd = p.ref("customer_email_scd")
+        # One pass per input. The latest SCD email per user is the latest
+        # per (email, user) pair taken again per user, ties going to the
+        # smaller email; a user the SCD never saw keeps the smallest of
+        # their staging emails. One row per user keeps customer_key
+        # joinable from the fact (schema.yml declares the dim key unique).
         latest = dedupe_latest(
-            scd.select("email_address", "user_db_id", F.col("time")),
-            ["email_address", "user_db_id"],
-            [F.desc("time")],
-        ).select(
-            "user_db_id",
-            F.col("email_address").alias("latest_seen_email_address"),
-            F.col("time").alias("last_seen_ts"),
+            scd.select("user_db_id", "email_address", "time"),
+            ["user_db_id"],
+            [F.desc("time"), F.col("email_address")],
         )
-        # One latest row per user for the merge-back (deterministic).
-        latest_per_user = dedupe_latest(
-            latest, ["user_db_id"], [F.desc("last_seen_ts"), F.col("latest_seen_email_address")]
+        original = c.groupBy("user_db_id").agg(
+            F.min(normalize_email(F.col("email_address"))).alias("original_email_address")
         )
-        merged = c.select(
-            "user_db_id", normalize_email(F.col("email_address")).alias("original_email_address")
-        ).join(latest_per_user, "user_db_id", "left")
-        final = merged.select(
+        return original.join(latest, "user_db_id", "left").select(
             "user_db_id",
-            F.coalesce("latest_seen_email_address", "original_email_address").alias(
+            F.coalesce("email_address", "original_email_address").alias(
                 "email_address_final"
             ),
-            "last_seen_ts",
-        )
-        # One row per user: multi-email users collapse to the latest-seen
-        # email (deterministic tiebreak), keeping customer_key joinable
-        # from the fact (schema.yml declares the dim key unique).
-        one_per_user = dedupe_latest(
-            final.distinct(),
-            ["user_db_id"],
-            [F.desc("last_seen_ts"), F.col("email_address_final")],
-        )
-        return one_per_user.withColumn(
-            "customer_key", F.xxhash64("email_address_final")
-        )
+            F.col("time").alias("last_seen_ts"),
+        ).withColumn("customer_key", F.xxhash64("email_address_final"))
 
     @p.model("mart_dim_product", materialized="table")
     def mart_dim_product(p: Pipeline) -> DataFrame:

@@ -12,7 +12,7 @@ Usage:
     df = queries["q1_pricing_summary"](spark, sf)
     df.collect()                      # metrics populate on execution
     s = exchange_summary(df)
-    s["shuffle_bytes"], s["n_shuffles"], s["broadcast_bytes"], ...
+    s["shuffle_bytes"], s["n_shuffles"], s["broadcast_payload_bytes"], ...
 """
 
 from __future__ import annotations
@@ -41,6 +41,30 @@ def _metric_values(jvm, node) -> dict[str, int]:
     return {k: jmap.get(k).value() for k in jmap.keySet().toArray()}
 
 
+def _broadcast_payload_bytes(jvm, node) -> int:
+    """Serialized size of an executed BroadcastExchange's value.
+
+    A broadcast is stored as torrent pieces ``broadcast_<id>_piece<n>``
+    in the driver's block manager: the relation serialized and
+    compressed, exactly the bytes shipped to each executor. Summing the
+    pieces' sizes measures that payload. It does not depend on
+    ``spark.buffer.pageSize`` or on memory per core, because a hashed
+    relation serializes its entries, not its pages. The value comes
+    from the exchange's completed broadcast future; nothing re-runs.
+    """
+    broadcast_id = node.executeBroadcast().id()
+    block_manager = jvm.org.apache.spark.SparkEnv.get().blockManager()
+    total, piece = 0, 0
+    while True:
+        status = block_manager.getStatus(
+            jvm.org.apache.spark.storage.BroadcastBlockId(broadcast_id, f"piece{piece}")
+        )
+        if status.isEmpty():
+            return total
+        total += status.get().memSize() + status.get().diskSize()
+        piece += 1
+
+
 def exchange_summary(df: DataFrame) -> dict[str, Any]:
     """Aggregate exchange/scan metrics of ``df``'s EXECUTED plan.
 
@@ -52,8 +76,13 @@ def exchange_summary(df: DataFrame) -> dict[str, Any]:
 
     Returns: n_shuffles, shuffle_records, shuffle_bytes (bytes written
     to shuffle storage), shuffle_data_size (pre-serialization row
-    bytes), n_broadcasts, broadcast_bytes, scan_rows (rows produced by
-    all file scans — the denominator for bytes-per-input-row).
+    bytes), n_broadcasts, broadcast_rows (rows collected into the
+    broadcasts), broadcast_payload_bytes (the serialized broadcast
+    values; see ``_broadcast_payload_bytes``), broadcast_alloc_bytes
+    (the exchanges' ``dataSize``: the hashed relations' in-memory page
+    allocation, which Spark sizes from memory per core, not from the
+    data), scan_rows (rows produced by all file scans — the
+    denominator for bytes-per-input-row).
     """
     spark = df.sparkSession
     jvm = spark._jvm
@@ -64,7 +93,9 @@ def exchange_summary(df: DataFrame) -> dict[str, Any]:
         "shuffle_bytes": 0,
         "shuffle_data_size": 0,
         "n_broadcasts": 0,
-        "broadcast_bytes": 0,
+        "broadcast_rows": 0,
+        "broadcast_payload_bytes": 0,
+        "broadcast_alloc_bytes": 0,
         "scan_rows": 0,
     }
     seen: set[int] = set()
@@ -92,7 +123,9 @@ def exchange_summary(df: DataFrame) -> dict[str, Any]:
             seen.add(key)
             m = _metric_values(jvm, n)
             out["n_broadcasts"] += 1
-            out["broadcast_bytes"] += m.get("dataSize", 0)
+            out["broadcast_rows"] += m.get("numOutputRows", 0)
+            out["broadcast_payload_bytes"] += _broadcast_payload_bytes(jvm, n)
+            out["broadcast_alloc_bytes"] += m.get("dataSize", 0)
         elif "FileSourceScan" in cname or cname.endswith("BatchScanExec"):
             if key in seen:
                 continue

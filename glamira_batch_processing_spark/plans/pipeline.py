@@ -6,7 +6,8 @@ views/tables (SURVEY.md §3.1). Here a model is a named function
 materialization decides whether the plan stays lazy (view — Catalyst
 inlines it downstream, exactly like BigQuery inlining staging views) or
 is persisted to parquet (table/snapshot — cuts recomputation and gives
-marts a stable scan).
+marts a stable scan). Tables are written only when a workdir is given;
+without one they stay lazy like views.
 """
 
 from __future__ import annotations
@@ -98,7 +99,10 @@ class Pipeline:
                     # TimePartitioning) -> downstream partition pruning.
                     writer = writer.partitionBy(m.partition_by)
                 writer.parquet(path)
-                df = self.spark.read.parquet(path)
+                # The writer already knows the schema: reading back with it
+                # skips parquet schema inference, a one-task job per table.
+                # A partition column still comes back last, with its type.
+                df = self.spark.read.schema(df.schema).parquet(path)
                 # run_results row counts come from the freshly-written
                 # parquet footers (num_rows metadata), not a second full
                 # Spark job — the unconditional df.count() here added

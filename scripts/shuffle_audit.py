@@ -61,7 +61,8 @@ def main() -> None:
         print(
             f"{name}: {s['n_shuffles']} shuffles {fmt_bytes(s['shuffle_bytes'])} "
             f"({s['shuffle_records']} rec), {s['n_broadcasts']} bcast "
-            f"{fmt_bytes(s['broadcast_bytes'])}, {s['scan_rows']} scanned, "
+            f"{fmt_bytes(s['broadcast_payload_bytes'])} "
+            f"(alloc {fmt_bytes(s['broadcast_alloc_bytes'])}), {s['scan_rows']} scanned, "
             f"{per_row:.2f} B/row"
         )
     rows.sort(key=lambda r: -r[1]["shuffle_bytes"])
@@ -80,14 +81,14 @@ def main() -> None:
         "Broadcasts are the small-dim sides — bounded by dimension size,",
         "not corpus size (the plan-shape tests pin WHICH sides broadcast).",
         "",
-        "| query | shuffles | shuffled | records | B/row | bcasts | bcast bytes | scanned rows |",
+        "| query | shuffles | shuffled | records | B/row | bcasts | bcast payload | scanned rows |",
         "|---|---|---|---|---|---|---|---|",
     ]
     for name, s, per_row in rows:
         lines.append(
             f"| {name} | {s['n_shuffles']} | {fmt_bytes(s['shuffle_bytes'])} "
             f"| {s['shuffle_records']} | {per_row:.2f} | {s['n_broadcasts']} "
-            f"| {fmt_bytes(s['broadcast_bytes'])} | {s['scan_rows']} |"
+            f"| {fmt_bytes(s['broadcast_payload_bytes'])} | {s['scan_rows']} |"
         )
     lines += ["", MARK_END]
     block = "\n".join(lines)

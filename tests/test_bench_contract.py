@@ -224,3 +224,22 @@ def test_scaling_rerun_artifact_and_summary_never_become_the_prior(tmp_path):
     src, pq, precision = bench._load_prior_queries(tmp_path)
     assert src == "BENCH_r14.json"
     assert pq == {"a": 1.0}
+
+
+def test_non_integer_cpus_falls_back_to_every_core(tmp_path, monkeypatch):
+    """The summary is built after every timing rep: a ``$SPARK_GRAFT_CPUS``
+    that is not an integer (``*`` is valid for ``local[*]``) must record
+    every core instead of raising and losing the run."""
+    import os
+
+    for value in ("*", "4x", ""):
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", value)
+        line, _ = bench.build_summaries(
+            _fake_timings(20), {}, "data/sf0.1", 3, tmp_path
+        )
+        assert json.loads(line)["cpus"] == os.cpu_count()
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "8")
+    line, _ = bench.build_summaries(
+        _fake_timings(20), {}, "data/sf0.1", 3, tmp_path
+    )
+    assert json.loads(line)["cpus"] == 8

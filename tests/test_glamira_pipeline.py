@@ -443,3 +443,150 @@ def test_check_relationships_fk_integrity(spark):
     assert check_relationships(child, "fk", parent, "id") == 1
     ok = spark.createDataFrame([(10, 1), (13, None)], "ck long, fk long")
     assert check_relationships(ok, "fk", parent, "id") == 0
+
+
+def _jobs_in_group(spark, group: str, action) -> int:
+    """Spark jobs ``action()`` launches, counted under its own job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_build_job_budget(glamira, spark, tmp_path):
+    """One full build computes each shared staging model once. With
+    stg_order/stg_customer as views recomputed in every consumer a
+    20k-event build ran 62 Spark jobs; as tables it runs 34, at that
+    size and at this fixture's."""
+    _, paths = glamira
+    p = build_glamira_pipeline(
+        spark,
+        raw_events=spark.read.parquet(paths["raw_events"]),
+        raw_product=spark.read.parquet(paths["raw_product"]),
+        raw_ip_locations=spark.read.parquet(paths["raw_ip_locations"]),
+        workdir=str(tmp_path / "models"),
+    )
+    assert len(p.models) == 14
+    jobs = _jobs_in_group(spark, "glamira-build-budget", p.run)
+    assert jobs <= 36, jobs
+
+
+def test_table_read_back_launches_no_job(spark, tmp_path):
+    """A table's ref() runs its write and nothing else: reading the
+    parquet back with the writer's schema infers none."""
+    from glamira_batch_processing_spark.plans.pipeline import Pipeline
+
+    p = Pipeline(spark, workdir=str(tmp_path))
+
+    @p.model("flat", materialized="table")
+    def flat(pl):
+        return spark.range(50, numPartitions=1).withColumn("k", F.col("id") % 3)
+
+    @p.model("by_day", materialized="table", partition_by="date")
+    def by_day(pl):
+        return spark.range(50, numPartitions=1).select(
+            F.date_add(F.lit("2020-01-01").cast("date"), (F.col("id") % 3).cast("int")).alias("date"),
+            "id",
+        )
+
+    for name in ("flat", "by_day"):
+        jobs = _jobs_in_group(spark, f"read-back-{name}", lambda: p.ref(name).schema)
+        assert jobs == 1, (name, jobs)  # the write's job only
+
+
+def test_table_read_back_schema_matches_inference(glamira, spark):
+    """Read back with the writer's schema, every table has the field
+    names, order and types parquet inference gives, the partition
+    column last as a date."""
+    from pyspark.sql.types import DateType
+
+    p, _ = glamira
+    tables = [n for n, m in p.models.items() if m.materialized == "table"]
+    assert {"mart_fact_order", "mart_dim_customer"} <= set(tables)
+    for name in tables:
+        got = [(f.name, f.dataType) for f in p.ref(name).schema]
+        inferred = [(f.name, f.dataType) for f in spark.read.parquet(f"{p.workdir}/{name}").schema]
+        assert got == inferred, name
+    assert p.ref("mart_fact_order").schema.fields[-1].dataType == DateType()
+
+
+def test_mart_dim_customer_matches_three_pass_formulation(spark):
+    """The one-pass mart_dim_customer equals the earlier formulation
+    (latest per (email, user), then per user, merge-back, distinct, and a
+    third dedupe) on hand-built staging and SCD frames."""
+    import datetime as dt
+
+    from glamira_batch_processing_spark.functions.cleaning import normalize_email
+    from glamira_batch_processing_spark.operators.windows import dedupe_latest
+    from glamira_batch_processing_spark.plans.pipeline import Model
+
+    t1, t2 = dt.datetime(2020, 1, 1), dt.datetime(2020, 6, 1)
+    stg_customer = spark.createDataFrame(
+        [
+            (" A@x ", 1, "Unique"),
+            ("b@x", 1, "Unique"),
+            (" Zed@x", 2, "Unique"),  # user 2: staging only
+            ("alpha@x ", 2, "Unique"),
+            ("n1@x", None, "Unique"),  # NULL user_db_id
+            (" M0@x", None, "Unique"),
+            ("p@x", 3, "Multiple"),  # user 3: several staging emails
+            ("q@x", 3, "Multiple"),
+        ],
+        "email_address string, user_db_id long, has_email_multiple_user_ids string",
+    )
+    scd = spark.createDataFrame(
+        [
+            (1, "b@x", t2),  # user 1: two emails tied on the latest time
+            (1, "a@x", t2),
+            (1, "c@x", t1),
+            (3, "r@x", t1),  # user 3: one SCD email, seen twice
+            (3, "r@x", t2),
+            (None, "z@x", t2),
+            (4, "d@x", t1),  # user 4: not in staging
+        ],
+        "user_db_id long, email_address string, time timestamp",
+    )
+
+    p = build_glamira_pipeline(spark, None, None, None)
+    p.models["stg_customer"] = Model("stg_customer", lambda _: stg_customer)
+    p.models["customer_email_scd"] = Model("customer_email_scd", lambda _: scd)
+    got = p.ref("mart_dim_customer")
+
+    latest = dedupe_latest(
+        scd.select("email_address", "user_db_id", "time"),
+        ["email_address", "user_db_id"],
+        [F.desc("time")],
+    ).select(
+        "user_db_id",
+        F.col("email_address").alias("latest_seen_email_address"),
+        F.col("time").alias("last_seen_ts"),
+    )
+    latest_per_user = dedupe_latest(
+        latest, ["user_db_id"], [F.desc("last_seen_ts"), F.col("latest_seen_email_address")]
+    )
+    final = stg_customer.select(
+        "user_db_id", normalize_email(F.col("email_address")).alias("original_email_address")
+    ).join(latest_per_user, "user_db_id", "left").select(
+        "user_db_id",
+        F.coalesce("latest_seen_email_address", "original_email_address").alias(
+            "email_address_final"
+        ),
+        "last_seen_ts",
+    )
+    want = dedupe_latest(
+        final.distinct(), ["user_db_id"], [F.desc("last_seen_ts"), F.col("email_address_final")]
+    ).withColumn("customer_key", F.xxhash64("email_address_final"))
+
+    assert got.schema == want.schema
+    rows = got.collect()
+    assert len(rows) == 4 and set(rows) == set(want.collect())
+    assert {(r.user_db_id, r.email_address_final, r.last_seen_ts) for r in rows} == {
+        (1, "a@x", t2),
+        (2, "alpha@x", None),
+        (3, "r@x", t2),
+        (None, "m0@x", None),
+    }

@@ -71,10 +71,12 @@ def test_funnel_count_distinct_no_expand_blowup(spark, qs):
 
 def test_decontaminate_probe_is_broadcast(spark, qs):
     """Benchmark decontamination: the eval shingle set broadcasts; the
-    corpus is never shuffled for the overlap probe."""
+    corpus is never shuffled for the overlap probe. The budget is on the
+    serialized payload; the hash relation's page allocation scales with
+    memory per core, not with the data."""
     s = _run(spark, qs, "decontaminate_benchmark_overlap")
     assert s["n_broadcasts"] >= 1, s
-    assert s["broadcast_bytes"] < 20_000_000, s
+    assert s["broadcast_payload_bytes"] < 20_000_000, s
 
 
 def test_video_frame_decode_is_scan_fused(spark, qs):
